@@ -74,6 +74,39 @@ object Bench {
     (tag, s"$tag=${snapshotFingerprint(dir)}")
   }
 
+  /** The compact final line's budget: the output's last 2000 chars are
+    * what gets archived and parsed, minus sbt's epilogue and the end of
+    * the full line. */
+  private[graft] val CompactLineMax = 1750
+
+  /** Failed query names; both lines place it right before `value`, in
+    * the guaranteed-archived tail. */
+  private[graft] def errorsField(failed: Seq[String]): String =
+    if (failed.isEmpty) ""
+    else s""""errors":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"""
+
+  private[graft] def corpusSkipFieldOf(reason: String): String =
+    if (reason.isEmpty) "" else s""""corpus_day_skip":"$reason","""
+
+  /** The first rendering of the compact line within [[CompactLineMax]]:
+    * `line(topN, errField, corpusSkipField)` is tried with the top 25,
+    * 20, …, 0 per-query mins, first with the full error list and skip
+    * reason, then with the error list cut to its count, then with the
+    * skip reason cut to its length as well. Those two are the fields a
+    * run (not the code) sizes; the full line keeps them whole. */
+  private[graft] def compactWithin(failed: Seq[String], skipReason: String)(
+      line: (Int, String, String) => String): String = {
+    val errCount = if (failed.isEmpty) "" else s""""errors_n":${failed.size},"""
+    val skipCount =
+      if (skipReason.isEmpty) "" else s""""corpus_day_skip_chars":${skipReason.length},"""
+    val full = (errorsField(failed), corpusSkipFieldOf(skipReason))
+    val tries = for {
+      (e, k) <- Seq(full, (errCount, full._2), (errCount, skipCount)).view
+      topN <- Seq(25, 20, 15, 10, 5, 0)
+    } yield line(topN, e, k)
+    tries.find(_.length <= CompactLineMax).getOrElse(tries.last)
+  }
+
   def main(args: Array[String]): Unit = {
     // wall-budget clock starts at main entry: the round-10 driver bench
     // died rc=124 (no JSON line at all) because 3 honest-metric sweeps +
@@ -504,15 +537,8 @@ object Bench {
       .map { case (n, s) =>
         s""""staged_${n}_sec":${r3(s - sampleDelta.getOrElse(n, 0.0))}""" }
       .mkString(",")
-    // errors sit in the guaranteed-archived tail, right before value
-    val errField =
-      if (failed.isEmpty) ""
-      else s""""errors":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"""
     val tablesField = tableCounts
       .map { case (n, c) => s"\"" + n + "\":" + c }.mkString("{", ",", "}")
-    val corpusSkipField =
-      if (corpusDaySkipReason.isEmpty) ""
-      else s""""corpus_day_skip":"$corpusDaySkipReason","""
     // warm_artifact names a sampled artifact, so it is emitted ONLY
     // when a sample ran — under =full/=off the old unconditional field
     // recorded the mode string as if it were an artifact name
@@ -533,7 +559,7 @@ object Bench {
     // the r12 verdict's top contract item). The FINAL printed line is
     // therefore a COMPACT summary, built below, guaranteed to fit the
     // archived tail: same `value`/methodology, top-25 per-query mins.
-    println(s"""{"metric":"total_full","unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"reps_done":$repsDone,"budget_s":${r3(budgetS)},"agg":"min","interleaved":true,"events_ts":"$eventsTsKind","tables":$tablesField,$canaryField"warehouse":"$warehouseMode","staged_builds":$stagedBuilds,$perStage,"staged_sec":${r3(staged)},"staged_ttstore_sec":${r3(ttStoreSec)},"staged_cold_sec":${r3(stagedColdSec)},"staged_warm_sec":${r3(stagedWarmSec)},"staged_cold_sample_sec":${r3(coldSampleSec)},"staged_warm_sample_sec":${r3(warmSampleSec)},$warmArtifactField"corpus_day_setup":"eval%${graft.text.Curation.Config().evalModulus}|30/10",$corpusSkipField"corpus_day_sec":${r3(corpusDaySec)},$retimedField$spreadField"spread_max":${r3(spreadMax)},"median_total":${r3(medianTotal)},"elapsed_s":${r3(elapsedS)},$errField"value":${r3(total)}}""")
+    println(s"""{"metric":"total_full","unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"reps_done":$repsDone,"budget_s":${r3(budgetS)},"agg":"min","interleaved":true,"events_ts":"$eventsTsKind","tables":$tablesField,$canaryField"warehouse":"$warehouseMode","staged_builds":$stagedBuilds,$perStage,"staged_sec":${r3(staged)},"staged_ttstore_sec":${r3(ttStoreSec)},"staged_cold_sec":${r3(stagedColdSec)},"staged_warm_sec":${r3(stagedWarmSec)},"staged_cold_sample_sec":${r3(coldSampleSec)},"staged_warm_sample_sec":${r3(warmSampleSec)},$warmArtifactField"corpus_day_setup":"eval%${graft.text.Curation.Config().evalModulus}|30/10",${corpusSkipFieldOf(corpusDaySkipReason)}"corpus_day_sec":${r3(corpusDaySec)},$retimedField$spreadField"spread_max":${r3(spreadMax)},"median_total":${r3(medianTotal)},"elapsed_s":${r3(elapsedS)},${errorsField(failed.toSeq)}"value":${r3(total)}}""")
     // COMPACT final line — the driver's artifact. Budget: 2000-char
     // archived tail minus ~120 chars of sbt epilogue ("[success]
     // Total time: …") minus the tail-end fragment of the full line
@@ -547,11 +573,12 @@ object Bench {
     // value = Σ(shown) + q_omitted_sec always holds. The snapshot
     // fingerprint replaces the full per-table count map as the
     // testdata-regeneration tripwire (same information, 12 chars).
-    // A hard guard trims the query map further if the line somehow
-    // outgrows the budget — an over-long final line is exactly the
-    // four-round parse failure this exists to end.
+    // A hard guard (`compactWithin`) trims the query map further, then
+    // the error list and skip reason, if the line outgrows the budget —
+    // an over-long final line is exactly the four-round parse failure
+    // this exists to end.
     val okByCost = ok.sortBy(-_._2)
-    def compactLine(topN: Int): String = {
+    def compactLine(topN: Int, errField: String, corpusSkipField: String): String = {
       val top = okByCost.take(topN)
       val shownSet = top.map(_._1).toSet
       val omittedSec = ok.filterNot(t => shownSet(t._1)).map(_._2).sum
@@ -560,13 +587,7 @@ object Bench {
         .mkString("{", ",", "}")
       s"""{"metric":"total","unit":"sec","queries":$qsTop,"q_total":${results.size},"q_shown":${top.size},"q_omitted_sec":${r3(omittedSec)},"sf":"$sfDir","snapshot":"${snapshotFingerprint(sfDir)}","reps":$reps,"reps_done":$repsDone,"agg":"min","interleaved":true,$canaryField"warehouse":"$warehouseMode","staged_builds":$stagedBuilds,"staged_sec":${r3(staged)},"staged_warm_sample_sec":${r3(warmSampleSec)},"staged_cold_sample_sec":${r3(coldSampleSec)},$corpusSkipField"corpus_day_sec":${r3(corpusDaySec)},"spread_max":${r3(spreadMax)},"median_total":${r3(medianTotal)},"elapsed_s":${r3(elapsedS)},$errField"value":${r3(total)}}"""
     }
-    var compact = compactLine(25)
-    var shrink = 20
-    while (compact.length > 1750 && shrink >= 0) {
-      compact = compactLine(shrink)
-      shrink -= 5
-    }
-    println(compact)
+    println(compactWithin(failed.toSeq, corpusDaySkipReason)(compactLine))
     // a per-run temp warehouse root is ours to remove (artifacts are
     // memoized in memory; nothing reads the store after the loop) —
     // user-pinned roots are left alone

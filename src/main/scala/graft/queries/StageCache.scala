@@ -122,8 +122,10 @@ private[graft] object StageStore {
   * data AFTER a successful write; a cold session finds the marker and
   * recreates the same external-table DDL over the committed location
   * — same bucket spec, so scans come back hash-partitioned without a
-  * byte rewritten (an interrupted write leaves no marker and
-  * rebuilds). The bucket count is DATA-derived (rows / RowsPerBucket,
+  * byte rewritten. The marker is written to a temp file and renamed
+  * into place, and a marker that does not parse counts as absent: an
+  * interrupted write — of the data or of the marker itself — rebuilds
+  * instead of failing every later cold session. The bucket count is DATA-derived (rows / RowsPerBucket,
   * clamped), so every session derives the same layout from the same
   * snapshot and a 100 TB index scales its bucket count with its size
   * instead of inheriting a local core count. */
@@ -167,26 +169,16 @@ private[graft] object BucketedStage {
       val want = fs.makeQualified(path).toString.stripSuffix("/")
       loc == want || { spark.sql(s"DROP TABLE `$name`"); false }
     }
-    if (!entryValid) {
-      if (fs.exists(marker)) {
+    if (!entryValid) readMarker(fs, marker) match {
+      case Some((ddl, n, ks)) =>
         // cold session over committed files: recreate the DDL
-        val in = fs.open(marker)
-        val meta =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val parsed = org.json4s.jackson.JsonMethods.parse(meta)
-        import org.json4s.DefaultFormats
-        implicit val fmts: org.json4s.DefaultFormats.type = DefaultFormats
-        val ddl = (parsed \ "schema").extract[String]
-        val n = (parsed \ "buckets").extract[Int]
-        val ks = (parsed \ "keys").extract[Seq[String]]
         spark.sql(
           s"""CREATE TABLE `$name` ($ddl) USING parquet
              |CLUSTERED BY (${ks.map(k => s"`$k`").mkString(", ")})
              |SORTED BY (${ks.map(k => s"`$k`").mkString(", ")})
              |INTO $n BUCKETS
              |LOCATION '${fs.makeQualified(path)}'""".stripMargin)
-      } else {
+      case None =>
         val df = build
         // data-derived bucket count: every session derives the same
         // layout from the same snapshot (a conf-derived count would
@@ -201,12 +193,36 @@ private[graft] object BucketedStage {
               "keys" -> org.json4s.JArray(
                 keys.map(org.json4s.JString(_)).toList),
               "buckets" -> org.json4s.JInt(n))))
-        val out = fs.create(marker, true)
+        // temp file + rename: a crash leaves the old state or the whole
+        // marker, never a prefix (the `_` prefix hides a leftover temp
+        // file from the table's scans)
+        val tmp = new org.apache.hadoop.fs.Path(path,
+          s"_graft_bucketed.json.${java.util.UUID.randomUUID}.tmp")
+        val out = fs.create(tmp, true)
         try out.write(json.getBytes("UTF-8")) finally out.close()
-      }
+        fs.delete(marker, false)
+        if (!fs.rename(tmp, marker))
+          throw new java.io.IOException(s"could not commit $marker")
     }
     spark.table(name)
   }
+
+  /** The committed marker's (schema DDL, bucket count, keys), or None
+    * when it is absent or does not parse — a marker cut short means
+    * "rebuild", never a resolve that fails in every later session. */
+  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
+      marker: org.apache.hadoop.fs.Path): Option[(String, Int, Seq[String])] =
+    if (!fs.exists(marker)) None
+    else scala.util.Try {
+      val in = fs.open(marker)
+      val meta =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      val parsed = org.json4s.jackson.JsonMethods.parse(meta)
+      implicit val fmts: org.json4s.DefaultFormats.type = org.json4s.DefaultFormats
+      ((parsed \ "schema").extract[String], (parsed \ "buckets").extract[Int],
+        (parsed \ "keys").extract[Seq[String]])
+    }.toOption
 }
 
 /** The single enumeration of every PERSISTABLE staged artifact across

@@ -197,4 +197,42 @@ class StageStoreSpec extends SparkSpec {
       graft.queries.Stages.clearAllForTesting()
     }
   }
+
+  test("a bucketed marker cut off at any byte rebuilds with the same rows") {
+    import spark.implicits._
+    val wh = warehouse("bkt_cut")
+    val rows = (0 until 50).map(i => (i % 7, s"v$i"))
+    var builds = 0
+    def resolve(): Seq[(Int, String)] =
+      graft.queries.BucketedStage.resolve(spark, wh, "cut", Seq("k")) {
+        builds += 1
+        rows.toDF("k", "v")
+      }.as[(Int, String)].collect().toSeq.sorted
+    def dropCatalogEntry(): Unit = spark.sql(s"DROP TABLE IF EXISTS `${
+      graft.queries.BucketedStage.catalogName(wh, "cut")}`")
+    assert(resolve() == rows.sorted && builds == 1)
+    val dir = Paths.get(wh, "bucketed", "cut")
+    val marker = dir.resolve("_graft_bucketed.json")
+    val whole = Files.readAllBytes(marker)
+    for (k <- Seq(0, 1, whole.length / 2, whole.length - 1)) {
+      // a crash k bytes into the marker: drop its checksum too, so the
+      // cut bytes themselves reach the reader
+      Files.write(marker, whole.take(k))
+      Files.deleteIfExists(dir.resolve("._graft_bucketed.json.crc"))
+      dropCatalogEntry()
+      val before = builds
+      assert(resolve() == rows.sorted, s"cut at byte $k")
+      assert(builds == before + 1, s"cut at byte $k did not rebuild")
+      assert(Files.readAllBytes(marker).sameElements(whole), s"cut at byte $k")
+    }
+    // the rewritten marker serves a cold session again, with no build,
+    // and the commit leaves no temp file behind
+    dropCatalogEntry()
+    val before = builds
+    assert(resolve() == rows.sorted && builds == before)
+    val leftovers = Option(dir.toFile.list).getOrElse(Array.empty[String])
+      .filter(_.contains(".tmp"))
+    assert(leftovers.isEmpty, leftovers.mkString(","))
+    dropCatalogEntry()
+  }
 }
