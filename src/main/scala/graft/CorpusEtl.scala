@@ -47,14 +47,13 @@ import graft.text.Curation
   * manifest pins exactly the versions this run's commits RETURNED,
   * and a concurrent second run fails its manifest commit LOUDLY.
   *
-  * STORAGE COST NOW MATCHES THE COMPUTE COST: the default backend is
+  * STORAGE COST MATCHES THE COMPUTE COST: the backend is
   * [[graft.etl.ManifestParquet]], whose append commit writes only the
-  * batch's files — so the three append-per-batch tables cost O(batch)
-  * bytes per day, completing the story where the versioned-parquet
-  * backend paid O(history) per commit (round-9 verdict's one scale
-  * caveat). [[forget]] and a backfill's full rewrites still rewrite —
-  * that is what they mean; periodic [[ManifestParquet.compact]] is
-  * the matching small-file maintenance.
+  * batch's files — so the append-per-batch tables cost O(batch) bytes
+  * per day, never O(history). A backfill's full rewrite still
+  * rewrites — that is what it means; periodic
+  * [[ManifestParquet.compact]] is the matching small-file
+  * maintenance.
   */
 object CorpusEtl {
 
@@ -74,10 +73,8 @@ object CorpusEtl {
   private[graft] val allTables = "eval_shingles" +: appendTables
 
   /** The storage backend a store root resolves to — the seam-wide
-    * default ([[graft.etl.TableFormat.DefaultBackend]], the
-    * manifest-log backend with O(batch) appends); CorpusEtlSpec also
-    * runs the fold through [[graft.etl.VersionedParquet]] to prove
-    * the pipeline is backend-agnostic above the seam. */
+    * [[graft.etl.TableFormat.DefaultBackend]], the manifest-log
+    * backend with O(batch) appends. */
   type Backend = TableFormat.Backend
   val DefaultBackend: Backend = TableFormat.DefaultBackend
 
@@ -267,10 +264,9 @@ object CorpusEtl {
     * winner); (3) FUTURE arrivals of the forgotten content are judged
     * fresh — the probe rows are gone, which is exactly what erasure
     * means. Scale: the erasure rides [[graft.etl.TableFormat
-    * .tryDeleteRows]] — on the default manifest-log backend that is a
-    * DELETION-VECTOR commit writing O(forget-set) bytes per table
-    * (the key set plus a tombstone manifest line; never a history
-    * rewrite), on versioned-parquet it is the anti-join rewrite.
+    * .tryDeleteRows]] — a DELETION-VECTOR commit writing
+    * O(forget-set) bytes per table (the key set plus a tombstone
+    * manifest line; never a history rewrite).
     * Logical first, physical on maintenance cadence: [[compactStore]]
     * materializes the tombstones and [[vacuumStore]] removes the
     * pre-forget versions' bytes from disk (CorpusEtlSpec's

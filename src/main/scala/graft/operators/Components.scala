@@ -130,13 +130,13 @@ object Components {
     * of its members (AdvancedOpsSpec asserts bit-equality, including
     * the new-chain-bridges-two-old-components case). */
   /** Fold one pair batch into a PERSISTED components labeling kept as
-    * a versioned [[graft.etl.TableFormat]] table — the single
-    * maintenance primitive both cadences share: streaming
-    * ([[graft.streaming.StreamingDedup.clusterMaintenance]] calls it
-    * per micro-batch) and the daily batch job (`q_cc_incremental`
-    * drives it through a table seeded with yesterday's labeling).
-    * First batch bootstraps the table with a from-scratch components
-    * run; later batches apply [[incremental]] — CC over the delta
+    * a versioned [[graft.etl.TableFormat]] table — the streaming
+    * cadence ([[graft.streaming.StreamingDedup.clusterMaintenance]]
+    * calls it per micro-batch); the daily batch job
+    * (`q_cc_incremental`) applies the same [[incremental]] fold to its
+    * staged labeling directly. First batch bootstraps the table with
+    * a from-scratch components run; later batches apply
+    * [[incremental]] — CC over the delta
     * graph only, the history never re-clusters — and commit the
     * merged labeling as the next version. An empty batch commits
     * nothing (the trait's "a no-op merge must not mint a version"

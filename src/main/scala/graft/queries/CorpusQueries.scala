@@ -169,13 +169,11 @@ object CorpusQueries {
     * (the other 1/4) mines its pairs against the band index + within
     * itself, and the labeling folds the delta in by contracting old
     * components to representatives — components never re-runs over
-    * the historical pair set. The labeling lives as a VERSIONED
-    * [[graft.etl.TableFormat]] table: yesterday's labeling is
-    * committed as v1, the delta folds in through
-    * [[graft.operators.Components.foldInto]] — the same maintenance
-    * primitive [[graft.streaming.StreamingDedup.clusterMaintenance]]
-    * drives per micro-batch — and the output READS the committed v2,
-    * so the oracle hash gates the persisted-artifact path end-to-end.
+    * the historical pair set. Yesterday's labeling is the staged
+    * artifact; the delta folds in through
+    * [[graft.operators.Components.incremental]] — the same fold
+    * [[graft.operators.Components.foldInto]] applies per micro-batch
+    * for [[graft.streaming.StreamingDedup.clusterMaintenance]].
     * Output = the merged labeling plus a `changed` flag (new node or
     * relabeled), i.e. exactly what a daily pipeline writes back to
     * the cluster table. The oracle recomputes BOTH labelings from
@@ -215,22 +213,24 @@ object CorpusQueries {
       index, batchBands, JaccardThreshold).select("a", "b")
     val intra = TextOps.minhashDupPairsFromBands(
       batchBands, JaccardThreshold).select("a", "b")
-    val clusters = new graft.etl.CommitLogTable(spark)
-    profiled("seed-clusters") { clusters.overwrite("clusters", oldLabels) }
-    // materialize the mined delta ONCE before the fold: foldInto walks
+    // materialize the mined delta ONCE before the fold: the fold walks
     // its pairs plan several times (empty-batch guard, contraction,
-    // new-node derivation) and would re-run the pair mining each
-    // time; the fold is eager (it commits the merged table), so both
-    // in-query checkpoints are dead — and freed — once it returns
+    // new-node derivation) and would re-run the pair mining each time
     val delta = profiled("mine-delta") {
       cross.unionByName(intra).localCheckpoint(true)
     }
     graft.operators.CheckpointBlocks.free(batchBands)
-    profiled("fold") {
-      graft.operators.Components.foldInto(clusters, "clusters", delta)
-    }
+    // the merged labeling materializes once, so the delta's blocks are
+    // dead — and freed — once it is built, and the contract sort's
+    // sampling re-reads blocks instead of re-running the fold; an empty
+    // delta leaves yesterday's labeling as it is
+    val merged =
+      if (delta.isEmpty) oldLabels
+      else profiled("fold") {
+        graft.operators.Components.incremental(oldLabels, delta)
+          .localCheckpoint(true)
+      }
     graft.operators.CheckpointBlocks.free(delta)
-    val merged = clusters.read("clusters")
     merged
       .join(oldLabels.withColumnRenamed("label", "old_label"), Seq("node"), "left")
       .select(col("node").as("doc_id"), col("label").as("component"),

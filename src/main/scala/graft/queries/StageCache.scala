@@ -3,9 +3,10 @@ package graft.queries
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{DoubleAdder, LongAdder}
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.VersionedParquet
+import graft.etl.ManifestParquet
 import graft.operators.CheckpointBlocks
 
 /** Where staged corpus artifacts persist BETWEEN sessions: a
@@ -59,46 +60,86 @@ private[graft] object StageStore {
   // resolved again — vacuum policy, like orphan store versions) and
   // the next resolve rebuilds from the now-erased source.
   // [[graft.CorpusEtl.forget]] bumps it for the snapshot dirs the
-  // caller names. Persisted per-warehouse as a one-line epoch file, so
-  // cold sessions see it; within a session the memory map is the
-  // source of truth (seeded from the file on first touch).
+  // caller names. Persisted per-warehouse as epoch files, so cold
+  // sessions see it; within a session the memory map is the source of
+  // truth (seeded from the files on first touch).
+  //
+  // Each bump publishes a NEW file, `<name>=<epoch>`, holding the
+  // epoch: written to a `_`-prefixed temp file, then renamed to a name
+  // no earlier bump used. It never renames over an existing file: such
+  // a rename is refused on HDFS-semantics filesystems (among them
+  // Hive's ProxyLocalFileSystem, which the Spark distribution's
+  // hive-exec jar registers for `file:` paths), and deleting first
+  // opens a window in which a crash leaves no file at all, i.e. epoch
+  // 0. The persisted epoch is the highest one any epoch file holds
+  // (older files are pruned after a commit; a bare `<name>` file, the
+  // single-file layout, counts too); a leftover temp file is never
+  // read. A file that does not parse fails every resolve of the
+  // snapshot until it is repaired: reading it as epoch 0 would
+  // resurface the artifacts built before the erasure.
 
   private val erasureEpochs = new ConcurrentHashMap[String, java.lang.Long]()
   private val epochSeeded = new ConcurrentHashMap[String, java.lang.Boolean]()
 
-  private def epochPath(root: String, dir: String) =
-    new org.apache.hadoop.fs.Path(root,
-      s"_erasure_epoch_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}")
+  private def epochName(dir: String) =
+    s"_erasure_epoch_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}"
+
+  /** `dir`'s committed epoch files under `root`, each with its epoch. */
+  private def epochFiles(fs: FileSystem, root: Path, dir: String): Seq[(Path, Long)] = {
+    val name = epochName(dir)
+    val committed = java.util.regex.Pattern.quote(name) + "(=[0-9]+)?"
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(_.getName.matches(committed))
+      .map { p =>
+        val in = fs.open(p)
+        val text =
+          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        p -> text.trim.toLongOption.getOrElse(
+          throw new IllegalStateException(s"erasure epoch file $p is " +
+            s"damaged (${text.length} bytes that are not an epoch): no " +
+            s"staged artifact of $dir resolves until it is repaired"))
+      }
+  }
 
   def erasureEpoch(spark: SparkSession, dir: String): Long = {
     val sessionKey = s"${spark.sparkContext.applicationId}|$dir"
-    if (epochSeeded.putIfAbsent(sessionKey, true) == null)
-      rootFor(dir).foreach { root =>
-        val p = epochPath(root, dir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) {
-          val in = fs.open(p)
-          val persisted =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-            finally in.close()
-          erasureEpochs.merge(dir, persisted, (a, b) => math.max(a, b))
-        }
+    if (!epochSeeded.containsKey(sessionKey)) {
+      rootFor(dir).foreach { r =>
+        val root = new Path(r)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        epochFiles(fs, root, dir).map(_._2).maxOption.foreach(persisted =>
+          erasureEpochs.merge(dir, persisted, (a, b) => math.max(a, b)))
       }
+      // seeded only after a successful read: a damaged file fails
+      // every call instead of the later ones falling back to epoch 0
+      epochSeeded.put(sessionKey, true)
+    }
     Option(erasureEpochs.get(dir)).map(_.longValue).getOrElse(0L)
   }
 
   /** Called by an erasure (after the snapshot's files are rewritten):
     * invalidates every staged artifact of `dir`, in this session and
-    * in the warehouse. Returns the new epoch. */
+    * in the warehouse. The new epoch file is committed before this
+    * returns. Returns the new epoch. */
   def bumpErasureEpoch(spark: SparkSession, dir: String): Long = {
     val next = erasureEpoch(spark, dir) + 1
-    erasureEpochs.put(dir, next)
-    rootFor(dir).foreach { root =>
-      val p = epochPath(root, dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(p, true)
+    rootFor(dir).foreach { r =>
+      val root = new Path(r)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val older = epochFiles(fs, root, dir)
+      val p = new Path(root, s"${epochName(dir)}=$next")
+      val tmp = new Path(root, s"_${java.util.UUID.randomUUID}${epochName(dir)}.tmp")
+      val out = fs.create(tmp, false)
       try out.write(next.toString.getBytes("UTF-8")) finally out.close()
+      if (!fs.rename(tmp, p)) {
+        fs.delete(tmp, false)
+        throw new java.io.IOException(s"could not commit erasure epoch $p")
+      }
+      older.foreach { case (f, _) => fs.delete(f, false) }
     }
+    erasureEpochs.put(dir, next)
     next
   }
 }
@@ -106,7 +147,7 @@ private[graft] object StageStore {
 /** Bucketed catalog commits for POSITIONED staged layouts (round 13,
   * verdict item 4): a layout whose value is its partitioning (the
   * fuzzy deletion index pre-positioned on its join key) cannot ride
-  * [[graft.etl.VersionedParquet]] — a plain parquet round-trip
+  * [[graft.etl.ManifestParquet]] — a plain parquet round-trip
   * discards exactly the layout it exists to hold. The production
   * shape is a table written BUCKETED on the key at index-write time
   * ([[graft.io.BucketedTables]], the `band_index` shape): a fresh JVM
@@ -390,9 +431,9 @@ private[graft] object Stages {
   * (`staged_sec`) instead of min-of-reps hiding it.
   *
   * When [[StageStore]] resolves a warehouse root for the snapshot
-  * dir, the artifact is a VERSIONED TABLE: first build writes v=1
-  * through [[graft.etl.VersionedParquet]] and frees the build's
-  * checkpoint blocks (the parquet artifact supersedes them); every
+  * dir, the artifact is a [[graft.etl.ManifestParquet]] table: first
+  * build commits version 1 and frees the build's checkpoint blocks
+  * (the parquet artifact supersedes them); every
   * later request — including a COLD SESSION — reads the committed
   * version instead of rebuilding (StageStoreSpec proves read-not-
   * rebuild and bit-equality with the in-process path). Without a
@@ -485,7 +526,7 @@ private[graft] final class StageCache {
     * would discard exactly the partitioning they exist to hold (a
     * real warehouse writes such tables BUCKETED on the key —
     * BucketingSpec proves that layout's zero-exchange join — but a
-    * plain versioned parquet dir cannot carry it). */
+    * plain manifest table's parquet dirs cannot carry it). */
   def apply(spark: SparkSession, dir: String, what: String,
       persistable: Boolean = true)(
       build: => DataFrame): DataFrame = {
@@ -503,7 +544,7 @@ private[graft] final class StageCache {
           builds.increment()
           build
         case Some(root) =>
-          val fmt = new VersionedParquet(spark, root)
+          val fmt = new ManifestParquet(spark, root)
           val tbl = StageStore.tableName(dir, what2)
           // the store read is MATERIALIZED once per session: a memoized
           // lazy scan would re-read parquet on every consuming query

@@ -4,13 +4,13 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.etl.{CommitLogTable, VersionedParquet}
+import graft.etl.ManifestParquet
 import graft.operators.Components
 import graft.queries.{DedupStage, GraphStage, LmStage, StageStore}
 
 /** The persisted-staged-artifact contract: with a warehouse root
   * configured, [[graft.queries.StageCache]] commits each artifact as
-  * a versioned TableFormat table on first build and every later
+  * a [[ManifestParquet]] table on first build and every later
   * request — including a COLD session — reads the committed version
   * instead of rebuilding, bit-equal to the in-process path. The
   * suite uses its own snapshot dir (symlinked at the source tables),
@@ -47,8 +47,8 @@ class StageStoreSpec extends SparkSpec {
       // TWO builds: components resolves its minhashPairs dependency
       // (the shared pair artifact, round 11) and then itself
       assert(DedupStage.buildCount == before + 2)
-      // the artifact is now a committed v=1 table in the warehouse
-      val fmt = new VersionedParquet(spark, wh)
+      // the artifact is now a committed version-1 table in the warehouse
+      val fmt = new ManifestParquet(spark, wh)
       val tbl = StageStore.tableName(dir,
         s"components|n=${graft.queries.CorpusQueries.ShingleN}" +
           s"|k=${graft.queries.CorpusQueries.MinhashK}" +
@@ -123,7 +123,7 @@ class StageStoreSpec extends SparkSpec {
     // (3,10) and adds a brand-new pair (20,21)
     val oldPairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
     val batch = Seq((3L, 10L), (20L, 21L)).toDF("a", "b")
-    val fmt = new CommitLogTable(spark)
+    val fmt = new ManifestParquet(spark, warehouse("fold"))
     fmt.overwrite("clusters", Components.connectedComponents(oldPairs))
     val v = Components.foldInto(fmt, "clusters", batch)
     assert(v == 2L)
@@ -140,7 +140,7 @@ class StageStoreSpec extends SparkSpec {
 
   test("foldInto bootstraps an absent table from scratch") {
     import spark.implicits._
-    val fmt = new CommitLogTable(spark)
+    val fmt = new ManifestParquet(spark, warehouse("boot"))
     val v = Components.foldInto(
       fmt, "boot", Seq((5L, 6L), (6L, 7L)).toDF("a", "b"))
     assert(v == 1L)
@@ -234,5 +234,88 @@ class StageStoreSpec extends SparkSpec {
       .filter(_.contains(".tmp"))
     assert(leftovers.isEmpty, leftovers.mkString(","))
     dropCatalogEntry()
+  }
+
+  test("erasure epoch: a damaged file fails every call and never reads as 0; a leftover temp file is ignored") {
+    val wh = warehouse("epoch")
+    def epochName(dir: String) =
+      "_erasure_epoch_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
+    // a committed epoch file cut at byte 0, or a single-layout file
+    // whose bytes are no epoch: the session must not fall back to
+    // epoch 0 on a later call (that would resolve the artifacts built
+    // before the erasure), and a bump must not start over from 1
+    for ((tag, suffix, damaged) <- Seq(("empty", "=1", ""), ("garbage", "", "x7"))) {
+      val dir = s"$wh/snap_$tag"
+      val file = Paths.get(wh, epochName(dir) + suffix)
+      StageStore.setForTesting(dir, wh)
+      try {
+        Files.write(file, damaged.getBytes("UTF-8"))
+        for (_ <- 1 to 3)
+          intercept[IllegalStateException](StageStore.erasureEpoch(spark, dir))
+        intercept[IllegalStateException](StageStore.bumpErasureEpoch(spark, dir))
+        // once repaired, the same session reads the file's epoch
+        Files.write(file, "4".getBytes("UTF-8"))
+        assert(StageStore.erasureEpoch(spark, dir) == 4L)
+      } finally StageStore.clearForTesting(dir)
+    }
+    // a bump that crashed before its rename leaves a temp file beside
+    // the committed epoch: readers see the committed epoch, and the
+    // next bump publishes a whole new epoch file, prunes the old one
+    // and leaves no temp file of its own
+    val dir = s"$wh/snap_tmp"
+    StageStore.setForTesting(dir, wh)
+    try {
+      Files.write(Paths.get(wh, epochName(dir)), "2".getBytes("UTF-8"))
+      val leftover = s"_crashed${epochName(dir)}.tmp"
+      Files.write(Paths.get(wh, leftover), "9".getBytes("UTF-8"))
+      assert(StageStore.erasureEpoch(spark, dir) == 2L)
+      assert(StageStore.bumpErasureEpoch(spark, dir) == 3L)
+      val names = Option(new java.io.File(wh).list).getOrElse(Array.empty[String])
+        .filter(n => n.contains("snap_tmp") && !n.endsWith(".crc")).toSet
+      assert(names == Set(leftover, epochName(dir) + "=3"), names.mkString(","))
+      assert(new String(Files.readAllBytes(Paths.get(wh, epochName(dir) + "=3")),
+        "UTF-8") == "3")
+    } finally StageStore.clearForTesting(dir)
+  }
+
+  test("an interrupted artifact commit (data staged, no manifest published) rebuilds once with the same rows") {
+    import spark.implicits._
+    val dir = snapshotDir("interrupted")
+    val wh = warehouse("interrupted")
+    val stage = new graft.queries.StageCache
+    val rows = (0L until 20L).map(i => (i, s"v$i"))
+    def resolve(): Seq[(Long, String)] =
+      stage(spark, dir, "interrupted")(rows.toDF("id", "v"))
+        .as[(Long, String)].collect().toSeq.sorted
+    StageStore.setForTesting(dir, wh)
+    try {
+      assert(resolve() == rows && stage.buildCount == 1L)
+      // rewind the committed table to the state a crash between the
+      // data write and the manifest rename leaves: the staged data dir
+      // is there, version 1's manifest is not, and a torn temp manifest
+      // sits in the log
+      val table = Paths.get(wh, StageStore.tableName(dir, "interrupted"))
+      val log = table.resolve("_log")
+      val manifest = log.resolve(f"${1L}%020d.manifest")
+      val whole = Files.readAllBytes(manifest)
+      Files.delete(manifest)
+      Files.deleteIfExists(log.resolve(s".${manifest.getFileName}.crc"))
+      Files.write(log.resolve("_0badc0de_1.manifest.tmp"), whole.take(whole.length / 2))
+      val staged = Option(table.toFile.list).getOrElse(Array.empty[String])
+        .filter(_.startsWith("d-"))
+      assert(staged.length == 1, staged.mkString(","))
+      assert(new ManifestParquet(spark, wh)
+        .currentVersion(StageStore.tableName(dir, "interrupted")) == 0L)
+      // a cold session: no memo; the resolve must rebuild exactly once
+      stage.clear()
+      assert(resolve() == rows)
+      assert(stage.buildCount == 2L, "an unpublished commit must rebuild once")
+      // and the rebuild's commit serves the next cold session unbuilt
+      stage.clear()
+      assert(resolve() == rows && stage.buildCount == 2L)
+    } finally {
+      StageStore.clearForTesting(dir)
+      stage.clearAndFree()
+    }
   }
 }

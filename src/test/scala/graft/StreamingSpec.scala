@@ -130,6 +130,13 @@ class StreamingSpec extends SparkSpec {
     s2.appendOnce(1L, StreamingCharts.rankBatch(day)) // a real new batch
     assert(s2.snapshot().count() === 2)
     assert(s2.committedBatchIds() === Set(0L, 1L))
+    // the second commit APPENDS: its manifest keeps the first commit's
+    // data dir and adds one, instead of rewriting both batches' rows
+    val manifests = new graft.etl.ManifestParquet(spark, root)
+    def dirsAt(v: Long) = manifests.manifestEntries("rankings", v).map(_.split(' ').head)
+    assert(s2.storeVersion === 2L)
+    assert(dirsAt(1L).size === 1)
+    assert(dirsAt(2L).size === 2 && dirsAt(2L).head === dirsAt(1L).head)
     // and a THIRD rehydration still sees exactly the committed state
     val s3 = new StreamingCharts.DurableRankingStore(spark, root)
     assert(s3.snapshot().count() === 2)
@@ -364,7 +371,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("a"), col("b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(allPairs.nonEmpty)
-    val fmt = new graft.etl.CommitLogTable(spark)
+    val fmt = new graft.etl.ManifestParquet(spark,
+      java.nio.file.Files.createTempDirectory("clusters").toString)
     val in = MemoryStream[(Long, Long)]
     val q = graft.streaming.StreamingDedup.clusterMaintenance(
         in.toDF().toDF("a", "b"), fmt, "clusters")
